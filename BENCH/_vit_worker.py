@@ -3,7 +3,7 @@
 Reads the shared trace parquet (byte-identical input at every level),
 runs the match stage at a FIXED partition count (64 — partitioning
 stays constant as cores scale, as on a real cluster), prints best-of-3
-wall seconds + an order-insensitive output checksum.
+wall seconds + an order-insensitive output checksum as one JSON line.
 
 Launch under ``taskset -c 0-(N-1)`` so the whole process tree (JVM task
 threads, GC, Arrow IPC, python workers) is confined to exactly N cores:
@@ -13,6 +13,7 @@ scaling efficiency.
 
 Usage: taskset -c 0-3 python BENCH/_vit_worker.py 4 [nparts]
 """
+import json
 import os
 import sys
 import time
@@ -61,6 +62,7 @@ for rep in range(3):
     dt = time.time() - t0
     cs = (str(row["c"]), int(row["n"]))
     best = dt if best is None else min(best, dt)
-print({"cpus": cpus, "nparts": nparts, "sec": round(best, 3),
-       "rows": n, "rows_per_sec": round(n / best), "checksum": cs})
+print(json.dumps({"cpus": cpus, "nparts": nparts, "sec": round(best, 3),
+                  "rows": n, "rows_per_sec": round(n / best),
+                  "checksum": cs}))
 spark.stop()

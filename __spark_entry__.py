@@ -5,10 +5,11 @@ synthesis over a grid road map, tile assignment, broadcast-index radius
 join, and the per-trace Viterbi matcher (applyInPandas kernel).
 
 queries()/oracle_sql(): one entry per implemented operator family from
-SURVEY.md §2 (see barefoot_spark/entry_queries.py). SQL-expressible ops
-carry a DuckDB oracle built from the same formula fragments as the Spark
-pipeline; kernel ops (Viterbi, seeded-signature dedup, image codec) are
-rows-only per the contract.
+SURVEY.md §2 (see barefoot_spark/entry_queries.py). Every entry is
+value-gated: SQL-expressible ops carry a DuckDB oracle built from the
+same formula fragments as the Spark pipeline; kernel ops (Viterbi,
+seeded-signature dedup, image codec) carry pinned expected rows
+(barefoot_spark/_goldens.py, written by tools/pin_goldens.py).
 """
 
 from __future__ import annotations

@@ -5,8 +5,8 @@ DBRCAN (modular 1-D) — analogs of the reference's analysis package
 DBCAN is pure SQL-window logic (gap analysis), so it runs entirely in
 Catalyst and has an exact DuckDB oracle. DBSCAN builds the ε-neighbor
 graph with the same cell-bucketed radius-join pattern as the spatial
-joins, then resolves clusters by iterative label propagation
-(DataFrame joins, converges in O(log n) rounds on typical data).
+joins, then resolves clusters by large-star/small-star connected
+components (graphx.components_star_nodes, O(log^2 n) rounds).
 DBRCAN rotates the ring at the largest gap and reuses DBCAN.
 """
 
@@ -196,8 +196,7 @@ def dbscan_2d(points: DataFrame, eps_m: float, min_pts: int,
        kernel) -> ε-neighbor edge list;
     2. core points = count(neighbors)+1 >= min_pts;
     3. clusters = connected components of the core-core subgraph via
-       iterative min-label propagation (each round: join labels across
-       edges, take min; stop when stable);
+       large-star/small-star (graphx.components_star_nodes);
     4. border points attach to the min core-neighbor label.
     Returns (point_id, cluster_id NULL for noise).
 

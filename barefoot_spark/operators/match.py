@@ -71,14 +71,6 @@ class MatcherParams:
     # TrackerServer.java:168 / KState.java:182 reject only strictly
     # out-of-order samples, equal times pass through.
     dup_time: str = "error"
-    # cap on distinct source-edge Dijkstra trees kept in the shared
-    # per-partition route cache (route_ssmt_cached): the cache is reset
-    # when the cap is hit, so kernel memory is bounded by this knob
-    # instead of growing with the partition's trace content on a
-    # continental map. Results are cap-invariant (any eviction only
-    # forces a recompute) — pinned by the parameterized
-    # match_trace cache-equivalence test.
-    route_cache_max_edges: int = 4096
 
 
 # ---------------------------------------------------------------------------
@@ -172,6 +164,11 @@ def route_ssmt(idx: RoadIndex, src, targets, cost_vec, bound_vec=None, bound_max
     return paths
 
 
+# cap on distinct source-edge Dijkstra trees kept in one route cache
+# (route_ssmt_cached): the cache is reset when the cap is hit, so kernel
+# memory stays bounded instead of growing with a partition's trace
+# content on a continental map. Results are cap-invariant (an eviction
+# only forces a recompute) — pinned by the match_trace cache test.
 _TREE_CACHE_MAX = 4096
 
 
@@ -238,8 +235,7 @@ def prepare_targets(idx: RoadIndex, targets):
 
 
 def route_ssmt_cached(idx: RoadIndex, src, targets, cost_vec, bound_vec,
-                      bound_max, cache: dict, prepared=None,
-                      cache_max: int = _TREE_CACHE_MAX):
+                      bound_max, cache: dict, prepared=None):
     """route_ssmt with a shared per-source-edge tree cache (SURVEY §7's
     route-cache plan). Exact same results as route_ssmt — the replay
     walks the recorded pop sequence in cost order, synthesizing reach
@@ -264,7 +260,7 @@ def route_ssmt_cached(idx: RoadIndex, src, targets, cost_vec, bound_vec,
     se = int(se)
     tree = cache.get(se)
     if tree is None:
-        if len(cache) >= cache_max:
+        if len(cache) >= _TREE_CACHE_MAX:
             cache.clear()
         tree = cache[se] = _EdgeTree(idx, se, cost_vec, bound_vec)
     K1 = cost_vec[se] * (1.0 - sf)
@@ -560,28 +556,19 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
     reference's strongest cross-check (tracker/TrackerServerTest.java:
     156-166).
 
-    Returns the new candidate vector (possibly empty)."""
-    cost_vec = idx.cost_vector(params.routing_cost)
-    bound_vec = idx.cost_dist
-    tp_vec = idx.cost_timeprio
-    sig2 = params.sigma ** 2
-    sqrt_2pi_sig2 = np.sqrt(2 * np.pi * sig2)
-    sigA2 = params.sigma_a ** 2
-    sqrt_2pi_sigA = np.sqrt(2 * np.pi * sigA2)
+    precomputed: this sample's ``_candidates_for_trace`` tuple (the
+    offline kernel searches the whole trace at once); None searches
+    here. route_cache: the ``route_ssmt_cached`` tree cache; None uses
+    a fresh one for this step.
 
+    Returns the new candidate vector (possibly empty)."""
     if precomputed is None:
-        pt, base, frac, _d = idx.radius(np.array([lat]), np.array([lon]),
-                                        params.max_radius)
-        _spt, seidx, sfrac, _src = idx.split(pt, base, frac)
-        ei, fr = minset(idx, seidx, sfrac)
-        if len(ei):
-            clat, clon, cazi = idx.edge_point(ei, fr)
-            dz = geo.distance(np.full(len(ei), lat), np.full(len(ei), lon),
-                              clat, clon)
-        else:
-            clat = clon = cazi = dz = np.zeros(0)
-    else:
-        ei, fr, clat, clon, cazi, dz = precomputed
+        precomputed = _candidates_for_trace(idx, [lat], [lon], params)[0]
+    if route_cache is None:
+        route_cache = {}
+    ei, fr, clat, clon, cazi, dz = precomputed
+    if not len(ei):
+        return []
     ei = np.asarray(ei, dtype=np.int64)
     fr = np.asarray(fr, dtype=np.float64).copy()
     clat = np.asarray(clat, dtype=np.float64).copy()
@@ -594,7 +581,7 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
     # A carried candidate REUSES the predecessor's road point (the
     # reference keeps the predecessor's RoadPoint object), so no
     # edge_point recompute — only its emission distance changes.
-    if prev_vector and len(ei):
+    if prev_vector:
         pos_of = {int(e): j for j, e in enumerate(ei)}
         hits = [(p, pos_of[p.eidx]) for p in prev_vector if p.eidx in pos_of]
         if hits:
@@ -614,28 +601,30 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
                                       np.full(len(cj), lon),
                                       clat[cj], clon[cj])
 
-    if len(ei):
-        emission = 1 / sqrt_2pi_sig2 * np.exp(-dz * dz / (2 * sig2))
-        if not np.isnan(azi):
-            da = np.abs(azi - cazi)
-            da = np.minimum(da, 360.0 - da)
-            emission = emission * np.maximum(
-                1e-2, 1 / sqrt_2pi_sigA * np.exp(-da * da / (2 * sigA2)))
-    else:
-        emission = np.zeros(0)
+    sig2 = params.sigma ** 2
+    sqrt_2pi_sig2 = np.sqrt(2 * np.pi * sig2)
+    sigA2 = params.sigma_a ** 2
+    sqrt_2pi_sigA = np.sqrt(2 * np.pi * sigA2)
+    emission = 1 / sqrt_2pi_sig2 * np.exp(-dz * dz / (2 * sig2))
+    if not np.isnan(azi):
+        da = np.abs(azi - cazi)
+        da = np.minimum(da, 360.0 - da)
+        emission = emission * np.maximum(
+            1e-2, 1 / sqrt_2pi_sigA * np.exp(-da * da / (2 * sigA2)))
 
     cands = [_Cand(ei[j], fr[j], clat[j], clon[j], cazi[j]) for j in range(len(ei))]
 
     # ------ transitions + forward step (Filter.execute) ------
-    result: list[_Cand] = []
-    if prev_vector and cands:
+    # with no predecessors trans is (0, C), and hmm_forward_arrays seeds
+    # the vector from emissions (the initial step)
+    trans = np.zeros((len(prev_vector), len(cands)))
+    routes: list[list] = [[None] * len(cands) for _ in prev_vector]
+    rlens = np.zeros((len(prev_vector), len(cands)))
+    if prev_vector:
         dt_ms = int(t_ms - prev_time)
         bound = max(1000.0, min(params.max_distance, (dt_ms // 1000) * 100.0))
         beta = max(1.0, float(dt_ms)) / 1000.0 if params.lam == 0 else 1.0 / params.lam
         targets = [(c.eidx, c.frac) for c in cands]
-        trans = np.zeros((len(prev_vector), len(cands)))
-        routes: list[list] = [[None] * len(cands) for _ in prev_vector]
-        rlens = np.zeros((len(prev_vector), len(cands)))
         # python-list cost views: the per-pair path walks below are ~5x
         # faster on float lists than numpy scalar indexing; identical
         # IEEE arithmetic either way
@@ -648,17 +637,11 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
         pend_pi: list[int] = []
         pend_ci: list[int] = []
         pend_cost: list[float] = []
-        prepared = prepare_targets(idx, targets) \
-            if route_cache is not None else None
+        prepared = prepare_targets(idx, targets)
         for pi, p in enumerate(prev_vector):
-            if route_cache is not None:
-                paths = route_ssmt_cached(idx, (p.eidx, p.frac), targets,
-                                          cost_rt_list, bound_list, bound,
-                                          route_cache, prepared=prepared,
-                                          cache_max=params.route_cache_max_edges)
-            else:
-                paths = route_ssmt(idx, (p.eidx, p.frac), targets, cost_vec,
-                                   bound_vec, bound)
+            paths = route_ssmt_cached(idx, (p.eidx, p.frac), targets,
+                                      cost_rt_list, bound_list, bound,
+                                      route_cache, prepared=prepared)
             routes_pi = routes[pi]
             rlens_pi = rlens[pi]
             pfrac = p.frac
@@ -694,48 +677,32 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
             trans[pend_pi, pend_ci] = (1.0 / beta) * np.exp(
                 -np.asarray(pend_cost) / beta)
 
-        # pure forward recurrence over the whole (P x C) matrix
-        # (hmm_forward_arrays — tested against the reference's
-        # FilterTest dense-matrix oracle)
-        filt_prev = np.array([p.filtprob for p in prev_vector])
-        seq_prev = np.array([p.seqprob for p in prev_vector])
-        filtprob, seqprob, pred, keep = hmm_forward_arrays(
-            filt_prev, seq_prev, trans, emission)
-        for ci in np.flatnonzero(keep):
-            c = cands[ci]
-            c.filtprob = float(filtprob[ci])
-            c.seqprob = float(seqprob[ci])
-            if pred[ci] >= 0:
-                best = int(pred[ci])
-                c.pred = prev_vector[best]
-                c.route = routes[best][ci]
-                c.route_len = float(rlens[best, ci])
-            else:
-                c.pred = None
-                c.route = None
-                c.route_len = None
-            result.append(c)
-    elif cands:
-        # no predecessors: initial seeding through the same recurrence
-        filtprob, seqprob, pred, keep = hmm_forward_arrays(
-            np.zeros(0), np.zeros(0), np.zeros((0, len(cands))), emission)
-        for ci in np.flatnonzero(keep):
-            c = cands[ci]
-            c.filtprob = float(filtprob[ci])
-            c.seqprob = float(seqprob[ci])
-            c.pred = None
-            c.route = None
-            c.route_len = None
-            result.append(c)
+    # pure forward recurrence over the whole (P x C) matrix
+    # (hmm_forward_arrays — tested against the reference's FilterTest
+    # dense-matrix oracle)
+    filt_prev = np.array([p.filtprob for p in prev_vector])
+    seq_prev = np.array([p.seqprob for p in prev_vector])
+    filtprob, seqprob, pred, keep = hmm_forward_arrays(
+        filt_prev, seq_prev, trans, emission)
+    result: list[_Cand] = []
+    for ci in np.flatnonzero(keep):
+        c = cands[ci]
+        c.filtprob = float(filtprob[ci])
+        c.seqprob = float(seqprob[ci])
+        if pred[ci] >= 0:   # seeded candidates keep pred/route None
+            best = int(pred[ci])
+            c.pred = prev_vector[best]
+            c.route = routes[best][ci]
+            c.route_len = float(rlens[best, ci])
+        result.append(c)
 
-    if result:
-        # KState.update: break candidates chain to previous estimate
-        # (KState.java:186-189)
-        if prev_vector:
-            prev_est = estimate(prev_vector)
-            for c in result:
-                if c.pred is None:
-                    c.pred = prev_est
+    # KState.update: break candidates chain to previous estimate
+    # (KState.java:186-189)
+    if result and prev_vector:
+        prev_est = estimate(prev_vector)
+        for c in result:
+            if c.pred is None:
+                c.pred = prev_est
     return result
 
 
@@ -747,13 +714,41 @@ def estimate(vector):
     return max(vector, key=lambda c: (c.filtprob, -c.eidx, -c.frac))
 
 
+def backtrack(sequence):
+    """Viterbi backtrack (KState.sequence, markov/KState.java:285-301):
+    follow predecessors from the estimate of the last vector, at most
+    one per stored vector. sequence: [(vector, key)] in time order.
+    Returns [(candidate, key)] oldest first, aligned to the tail of
+    sequence (a chain cut short by pruning covers only its last steps)."""
+    chain = []
+    it = estimate(sequence[-1][0])
+    while it is not None and len(chain) < len(sequence):
+        chain.append(it)
+        it = it.pred
+    chain.reverse()
+    offset = len(sequence) - len(chain)
+    return [(c, sequence[offset + j][1]) for j, c in enumerate(chain)]
+
+
+def thinned(params: MatcherParams, dt_ms, lat, lon, last_lat, last_lon) -> bool:
+    """Sample thinning (Matcher.java:376-380, TrackerServer.java:173-185):
+    a sample less than min_interval_ms or min_distance from the last
+    kept sample is dropped. The geodesic runs only when the distance
+    gate is on."""
+    if dt_ms < max(0, params.min_interval_ms):
+        return True
+    min_d = max(0.0, params.min_distance)
+    return min_d > 0.0 and \
+        float(geo.distance(lat, lon, last_lat, last_lon)) < min_d
+
+
 def match_trace(idx: RoadIndex, trace_id, sample_ids, times_ms, lats, lons,
                 azimuths, params: MatcherParams,
                 route_cache: dict | None = None) -> list[tuple]:
     """Offline match of one trace; returns MATCH_SCHEMA rows.
     route_cache: shared per-source-edge Dijkstra tree cache (see
     route_ssmt_cached) — safe to share across traces on the same map
-    with the same cost function."""
+    with the same cost function; None uses a fresh one for this trace."""
     order = np.argsort(times_ms, kind="stable")
     sample_ids = np.asarray(sample_ids)[order]
     times_ms = np.asarray(times_ms, dtype=np.int64)[order]
@@ -776,35 +771,20 @@ def match_trace(idx: RoadIndex, trace_id, sample_ids, times_ms, lats, lons,
                 lats, lons = lats[keep_m], lons[keep_m]
                 azimuths = azimuths[keep_m]
 
-    cost_vec = idx.cost_vector(params.routing_cost)
-    bound_vec = idx.cost_dist
-    tp_vec = idx.cost_timeprio
-    sig2 = params.sigma ** 2
-    sqrt_2pi_sig2 = np.sqrt(2 * np.pi * sig2)
-    sigA2 = params.sigma_a ** 2
-    sqrt_2pi_sigA = np.sqrt(2 * np.pi * sigA2)
-
-    # thinning (Matcher.java:376-380) needs the last *kept* sample, so the
-    # kept set is decided sequentially; radius search runs vectorized on
-    # the kept samples afterwards.
-    min_d = max(0.0, params.min_distance)
-    min_dt = max(0, params.min_interval_ms)
-    if min_d <= 0.0 and min_dt <= 0:
+    # thinning needs the last *kept* sample, so the kept set is decided
+    # sequentially; radius search runs vectorized on the kept samples
+    # afterwards.
+    if params.min_distance <= 0.0 and params.min_interval_ms <= 0:
         # both gates disabled (the defaults): nothing can thin, skip the
-        # per-sample geodesic entirely
+        # per-sample loop entirely
         kept = np.arange(len(times_ms))
     else:
-        kept = []
-        last_t, last_lat, last_lon = None, None, None
-        for i in range(len(times_ms)):
-            if last_t is not None:
-                if (times_ms[i] - last_t) < min_dt:
-                    continue
-                d = float(geo.distance(lats[i], lons[i], last_lat, last_lon))
-                if d < min_d:
-                    continue
-            kept.append(i)
-            last_t, last_lat, last_lon = times_ms[i], lats[i], lons[i]
+        kept = [0] if len(times_ms) else []
+        for i in range(1, len(times_ms)):
+            j = kept[-1]
+            if not thinned(params, times_ms[i] - times_ms[j],
+                           lats[i], lons[i], lats[j], lons[j]):
+                kept.append(i)
         kept = np.array(kept, dtype=np.int64)
     if not len(kept):
         return []
@@ -812,6 +792,8 @@ def match_trace(idx: RoadIndex, trace_id, sample_ids, times_ms, lats, lons,
     k_lat, k_lon, k_azi = lats[kept], lons[kept], azimuths[kept]
 
     cand_sets = _candidates_for_trace(idx, k_lat, k_lon, params)
+    if route_cache is None:
+        route_cache = {}
 
     sequence: list[tuple[list[_Cand], int]] = []  # (vector, step)
     prev_vector: list[_Cand] = []
@@ -832,21 +814,8 @@ def match_trace(idx: RoadIndex, trace_id, sample_ids, times_ms, lats, lons,
     if not sequence:
         return []
 
-    # estimate + backtrack (KState.java:265-301)
-    est = estimate(sequence[-1][0])
-    chain = []
-    it = est
-    for _ in range(len(sequence)):
-        if it is None:
-            break
-        chain.append(it)
-        it = it.pred
-    chain = chain[::-1]
-
     rows = []
-    offset = len(sequence) - len(chain)
-    for j, c in enumerate(chain):
-        vec, step = sequence[offset + j]
+    for c, step in backtrack(sequence):
         route_eids = [int(idx.edge_id[e]) for e in c.route] if c.route else []
         rows.append((str(trace_id), int(step), str(k_ids[step]), int(k_t[step]),
                      int(idx.edge_id[c.eidx]), float(c.frac), float(c.lat),

@@ -24,11 +24,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import numpy as np
-
 from .. import geo
 from ..index import RoadIndex
-from ..operators.match import MatcherParams, _Cand, estimate, forward_step
+from ..operators.match import (
+    MatcherParams, _Cand, backtrack, estimate, forward_step, thinned,
+)
 
 
 @dataclass
@@ -75,6 +75,9 @@ class OnlineMatcher:
         self.ttl_ms = ttl_ms
         self.sensitive_m = sensitive_m
         self.states: dict[str, OnlineState] = {}
+        # route_ssmt_cached tree cache shared by every trace (one map,
+        # one cost function), as match_traces shares one per partition
+        self.route_cache: dict = {}
 
     # ------------------------------------------------------------------
     def update(self, trace_id: str, t_ms: int, lat: float, lon: float,
@@ -89,18 +92,18 @@ class OnlineMatcher:
         if st.last_time is not None and t_ms < st.last_time:
             return "order", False, None
         # thinning gates (TrackerServer.java:173-185)
-        if st.last_time is not None:
-            d = float(geo.distance(lat, lon, st.last_lat, st.last_lon))
-            if d < max(0.0, self.params.min_distance) or \
-                    (t_ms - st.last_time) < max(0, self.params.min_interval_ms):
-                return "thin", False, None
+        if st.last_time is not None and thinned(
+                self.params, t_ms - st.last_time, lat, lon,
+                st.last_lat, st.last_lon):
+            return "thin", False, None
 
         prev_vector = st.sequence[-1][0] if st.sequence else []
         prev_time = st.sequence[-1][1] if st.sequence else None
         prev_est = estimate(prev_vector) if prev_vector else None
 
         vector = forward_step(self.idx, self.params, prev_vector, prev_time,
-                              t_ms, lat, lon, azi)
+                              t_ms, lat, lon, azi,
+                              route_cache=self.route_cache)
         if not vector:
             return "break", False, None
 
@@ -135,21 +138,8 @@ class OnlineMatcher:
         st = self.states.get(trace_id)
         if st is None or not st.sequence:
             return []
-        it = estimate(st.sequence[-1][0])
-        chain = []
-        for _ in range(len(st.sequence)):
-            if it is None:
-                break
-            chain.append(it)
-            it = it.pred
-        chain = chain[::-1]
-        out = []
-        offset = len(st.sequence) - len(chain)
-        for j, c in enumerate(chain):
-            _, t_ms = st.sequence[offset + j]
-            out.append((trace_id, int(t_ms), int(self.idx.edge_id[c.eidx]),
-                        float(c.frac)))
-        return out
+        return [(trace_id, int(t_ms), int(self.idx.edge_id[c.eidx]),
+                 float(c.frac)) for c, t_ms in backtrack(st.sequence)]
 
     def expire(self, now_ms: int):
         """TTL cleaner (TemporaryMemory.java:49-78): drop dead states,

@@ -525,28 +525,57 @@ def test_route_cache_exact_ties_and_bound():
 
 
 @pytest.mark.parametrize("cache_cap", [1, 2, 4096])
-def test_match_trace_route_cache_equivalence(cache_cap):
+def test_match_trace_route_cache_equivalence(cache_cap, monkeypatch):
     """match_trace with a shared route cache emits exactly the rows the
-    uncached path emits (same estimates, same routes, same probs) — at
-    ANY route_cache_max_edges cap, including a pathological cap of 1
-    (every new source edge evicts the whole cache), proving the memory
-    bound cannot change results."""
+    same kernel emits when routed by the uncached reference Dijkstra
+    route_ssmt (same estimates, same routes, same probs) — at ANY
+    _TREE_CACHE_MAX cap, including a pathological cap of 1 (every new
+    source edge evicts the whole cache), proving the memory bound cannot
+    change results. An OnlineMatcher sharing one cache across all the
+    traces, fed their samples interleaved in time, backtracks to the
+    same edges and fractions (TrackerServerTest.java:156-166)."""
     from barefoot_spark import roads as R
     from barefoot_spark.index import RoadIndex
     from barefoot_spark.sources import samples as SS
+    from barefoot_spark.streaming.online import OnlineMatcher
 
     idx = RoadIndex(R.grid_pdf(12, seed=42), res=16)
     pdf = SS.synth_traces(idx, n_traces=8, samples_per_trace=40, seed=9)
+    params = M.MatcherParams()
+    traces = {tid: (idx, tid, g["sample_id"].to_numpy(),
+                    g["time"].to_numpy(np.int64),
+                    g["lat"].to_numpy(np.float64),
+                    g["lon"].to_numpy(np.float64),
+                    g["azimuth"].to_numpy(np.float64))
+              for tid, g in pdf.groupby("trace_id")}
+
+    def uncached(idx, src, targets, cost_vec, bound_vec, bound_max, cache,
+                 prepared=None):
+        return M.route_ssmt(idx, src, targets, cost_vec, bound_vec, bound_max)
+
+    with monkeypatch.context() as m:
+        m.setattr(M, "route_ssmt_cached", uncached)
+        want = {tid: M.match_trace(*args, params)
+                for tid, args in traces.items()}
+    assert sum(len(r) for r in want.values()) > 0
+
+    monkeypatch.setattr(M, "_TREE_CACHE_MAX", cache_cap)
     cache: dict = {}
-    params = M.MatcherParams(route_cache_max_edges=cache_cap)
-    for tid, g in pdf.groupby("trace_id"):
-        base = (idx, tid, g["sample_id"].to_numpy(),
-                g["time"].to_numpy(np.int64),
-                g["lat"].to_numpy(np.float64), g["lon"].to_numpy(np.float64),
-                g["azimuth"].to_numpy(np.float64))
-        assert M.match_trace(*base, params, route_cache=cache) \
-            == M.match_trace(*base, M.MatcherParams())
+    for tid, args in traces.items():
+        assert M.match_trace(*args, params, route_cache=cache) == want[tid]
         assert len(cache) <= cache_cap   # cap enforced (reset-on-hit)
+
+    om = OnlineMatcher(idx, params)
+    for r in pdf.sort_values(["time", "trace_id"]).itertuples(index=False):
+        om.update(r.trace_id, int(r.time), r.lat, r.lon, r.azimuth)
+    assert len(om.route_cache) <= cache_cap
+    for tid, rows in want.items():
+        online = om.sequence(tid)
+        # the online search runs per sample and the offline one per
+        # trace; the batched geodesic refine can differ in the last ulp
+        assert [o[:3] for o in online] == [(r[0], r[3], r[4]) for r in rows]
+        assert np.allclose([o[3] for o in online], [r[5] for r in rows],
+                           rtol=0, atol=1e-10)
 
 
 def test_duplicate_timestamp_gate():

@@ -65,7 +65,7 @@ def test_connected_components(spark):
         [(99, 100, 101, False, "LINESTRING(12.0 49.0, 12.01 49.0)")])
     rdf = roads.roads_df(spark, pd.concat([pdf, extra], ignore_index=True))
     edges = roads.edges_view(rdf)
-    comp = graphx.connected_components(edges).toPandas()
+    comp = graphx.connected_components_star(edges).toPandas()
     by_edge = dict(zip(comp["edge_id"], comp["component"]))
     main = {by_edge[e] for e in [0, 1, 2, 4, 6, 8, 10, 12]}
     assert len(main) == 1
@@ -89,16 +89,15 @@ def test_parse_reference_sample_fixture():
 
 
 def test_connected_components_star_equivalence(spark):
-    """large-star/small-star CC == label propagation on a random graph
-    with many components, a long path (high diameter), and the micro7
-    map — the scale algorithm must be a drop-in replacement."""
+    """large-star/small-star CC == a pure-Python union-find on a random
+    graph with many components and a long path (high diameter)."""
     import numpy as np
     rng = np.random.default_rng(3)
     # random sparse graph: 120 vertices, 110 edges -> several components
     src = rng.integers(0, 120, 110)
     dst = rng.integers(0, 120, 110)
-    # plus a 40-vertex path (diameter stress: label propagation needs
-    # ~40 rounds; star finishes in O(log^2))
+    # plus a 40-vertex path (diameter stress: label propagation would
+    # need ~40 rounds; star finishes in O(log^2))
     psrc = np.arange(200, 239)
     pdst = np.arange(201, 240)
     eid = np.arange(len(src) + len(psrc))
@@ -107,11 +106,20 @@ def test_connected_components_star_equivalence(spark):
         "source": np.concatenate([src, psrc]),
         "target": np.concatenate([dst, pdst])})
     edges = spark.createDataFrame(pdf)
-    lp = graphx.connected_components(edges, max_rounds=60).toPandas()
+    parent: dict = {}
+
+    def find(v):
+        while parent.setdefault(v, v) != v:
+            v = parent[v]
+        return v
+
+    for u, v in zip(pdf["source"], pdf["target"]):
+        ru, rv = find(int(u)), find(int(v))
+        parent[max(ru, rv)] = min(ru, rv)   # root = component min
+    want = {int(e): find(int(u)) for e, u in zip(pdf["edge_id"], pdf["source"])}
     st = graphx.connected_components_star(edges).toPandas()
-    lp_m = dict(zip(lp["edge_id"], lp["component"]))
-    st_m = dict(zip(st["edge_id"], st["component"]))
-    assert lp_m == st_m
+    st_m = {int(e): int(c) for e, c in zip(st["edge_id"], st["component"])}
+    assert st_m == want
     # path is one component labeled by its min vertex
     assert st_m[len(src)] == 200
 
@@ -119,8 +127,7 @@ def test_connected_components_star_equivalence(spark):
 def test_graph_construction_and_components_reference_goldens(spark):
     """GraphTest.testConstruction/testComponents (topology/GraphTest.
     java:32-141) verbatim: successor sets per edge and weakly-connected
-    edge components (dead ends, circle, self-loop, star, path) — on
-    both CC algorithms."""
+    edge components (dead ends, circle, self-loop, star, path)."""
     import pandas as pd
 
     cons = [(0, 0, 1), (1, 1, 0), (2, 1, 2), (3, 2, 1), (4, 3, 1),
@@ -143,12 +150,11 @@ def test_graph_construction_and_components_reference_goldens(spark):
             {14, 15, 16}, {17, 18, 19, 20, 21, 22, 23}]
     cdf = spark.createDataFrame(pd.DataFrame(
         comp_edges, columns=["edge_id", "source", "target"]))
-    for fn in (graphx.connected_components, graphx.connected_components_star):
-        out = fn(cdf).toPandas()
-        groups = {}
-        for e, c in zip(out["edge_id"], out["component"]):
-            groups.setdefault(c, set()).add(int(e))
-        assert sorted(map(sorted, groups.values())) == sorted(map(sorted, want)), fn
+    out = graphx.connected_components_star(cdf).toPandas()
+    groups = {}
+    for e, c in zip(out["edge_id"], out["component"]):
+        groups.setdefault(c, set()).add(int(e))
+    assert sorted(map(sorted, groups.values())) == sorted(map(sorted, want))
 
 
 def test_azimuth_normalization_reference_goldens():

@@ -50,18 +50,25 @@ def test_nearest_and_knn_join(spark, idx, idx_bc):
     assert np.all(np.diff(knn.sort_values("distance")["distance"]) >= 0)
 
 
-def test_tile_assign_udf_equals_expr(spark):
+def test_tile_assign_equals_numpy_cells(spark):
+    """The Catalyst cell expression (and its parent prefix) equals the
+    independent numpy kernel cells.latlng_to_cell."""
+    from barefoot_spark import cells
+
     pdf = pd.DataFrame({
         "point_id": [str(i) for i in range(500)],
         "lat": np.linspace(-80, 80, 500),
         "lon": np.linspace(-170, 170, 500),
     })
-    df = spark.createDataFrame(pdf)
-    a = tiles.assign_tiles(df, res=15, use_udf=True).toPandas()
-    b = tiles.assign_tiles(df, res=15, use_udf=False).toPandas()
-    pd.testing.assert_series_equal(
-        a.sort_values("point_id")["cell"].reset_index(drop=True),
-        b.sort_values("point_id")["cell"].reset_index(drop=True))
+    out = tiles.assign_tiles(spark.createDataFrame(pdf), res=15,
+                             parent_res=7).toPandas()
+    out = out.sort_values("point_id").reset_index(drop=True)
+    want = pdf.sort_values("point_id").reset_index(drop=True)
+    lat, lon = want["lat"].to_numpy(), want["lon"].to_numpy()
+    np.testing.assert_array_equal(out["cell"].to_numpy(),
+                                  cells.latlng_to_cell(lat, lon, 15))
+    np.testing.assert_array_equal(out["cell_p7"].to_numpy(),
+                                  cells.latlng_to_cell(lat, lon, 7))
 
 
 def test_tile_assign_stable_across_parallelism(spark):

@@ -45,7 +45,10 @@ def launch(cpus: int) -> dict:
          os.path.join(REPO, "BENCH", "_vit_worker.py"), str(cpus)],
         capture_output=True, text=True, env=env)
     out = [l for l in p.stdout.splitlines() if l.startswith("{")]
-    res = eval(out[-1], {"__builtins__": {}})  # trusted: our own worker
+    if p.returncode != 0 or not out:
+        raise RuntimeError(f"_vit_worker.py at {cpus} cpus exited "
+                           f"{p.returncode}:\n{p.stderr}")
+    res = json.loads(out[-1])
     new = set(glob.glob(os.path.join(LOGDIR, "*"))) - before
     res.update(parse_eventlog(new.pop()))
     return res
