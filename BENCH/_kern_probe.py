@@ -1,9 +1,10 @@
 """Spark-free viterbi kernel ceiling probe.
 
-Runs the EXACT per-partition match kernel (same 64 hash-partitioned
-trace groups the Spark stage processes, same route-cache scoping) as N
-concurrent OS processes pulling groups from a shared queue — no Spark,
-no Arrow, no shuffle. The (t_lo/t_hi)/(hi/lo) ratio is therefore the
+Runs the per-partition match kernel (same route-cache scoping) over 64
+trace groups formed by hash grouping like Spark's — md5 of the trace
+id, not Spark's murmur3, so group membership and skew only approximate
+the Spark stage's — as N concurrent OS processes pulling groups from a
+shared queue: no Spark, no Arrow, no shuffle. The (t_lo/t_hi)/(hi/lo) ratio is therefore the
 HOST's real parallel capacity for this workload class (python+numpy
 kernel processes), the denominator for normalizing the Spark stage's
 raw scaling efficiency: anything the bare kernel loses at 16-way

@@ -36,6 +36,11 @@ if os.environ.get("VIT_EVENTLOG_DIR"):
     os.makedirs(os.environ["VIT_EVENTLOG_DIR"], exist_ok=True)
     extra["spark.eventLog.enabled"] = "true"
     extra["spark.eventLog.dir"] = "file://" + os.environ["VIT_EVENTLOG_DIR"]
+    # vit_scaling.parse_eventlog reads a rolling, zstd-compressed log
+    # directory; set both rather than rely on the Spark version's defaults
+    extra["spark.eventLog.rolling.enabled"] = "true"
+    extra["spark.eventLog.compress"] = "true"
+    extra["spark.eventLog.compression.codec"] = "zstd"
 spark = build_session(app=f"vitw-{cpus}", master=f"local[{cpus}]",
                       shuffle_partitions=max(cpus, 8), extra_conf=extra)
 spark.sparkContext.setLogLevel("ERROR")

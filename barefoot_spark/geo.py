@@ -155,12 +155,18 @@ def direct(lat1, lon1, azi1, s12):
     return lat2, lon2, azi2
 
 
-def _inverse_scalar_s12(lat1, lon1, lat2, lon2):
-    """Scalar Vincenty distance — same formula/iteration as `inverse`
-    but via the math module. For arrays of a handful of elements the
-    numpy path pays ~200µs of ufunc/errstate overhead per call; the
-    matcher's per-step carry-over checks hit exactly that regime, so
-    tiny batches route here (identical math, same convergence test)."""
+def distance_scalar(lat1, lon1, lat2, lon2):
+    """Geodesic distance in meters for ONE pair of Python floats: the
+    same Vincenty formula and iteration as `inverse`, but via the math
+    module, for callers that need single pairs (the matcher's per-step
+    carry-over test) and for `distance`'s tiny batches, where numpy pays
+    ~200µs of ufunc/errstate overhead per call.
+
+    Not bit-identical to `inverse`: libm and numpy's SIMD
+    transcendentals round differently, and this loop stops when its own
+    pair converges, while `inverse` iterates until every lane of its
+    batch has. On pairs up to a few hundred meters apart the two agree
+    to about 1e-8 relative (bounded by tests/test_geo.py)."""
     import math as m
     if lat1 == lat2 and lon1 == lon2:
         return 0.0
@@ -208,8 +214,10 @@ def _inverse_scalar_s12(lat1, lon1, lat2, lon2):
 
 def distance(lat1, lon1, lat2, lon2):
     """Geodesic distance in meters (Geography.java:27-30). Tiny batches
-    (<= 8 elements, all-scalar broadcast inputs) take the scalar fast
-    path; everything else runs the vectorized kernel."""
+    (<= 8 elements, all-scalar broadcast inputs) take `distance_scalar`
+    per pair; everything else runs the vectorized `inverse`. The two
+    paths agree to about 1e-8 relative, not bit for bit, so a pair's
+    distance can depend on the size of the batch it comes in."""
     a1 = np.asarray(lat1, dtype=np.float64)
     o1 = np.asarray(lon1, dtype=np.float64)
     a2 = np.asarray(lat2, dtype=np.float64)
@@ -218,7 +226,7 @@ def distance(lat1, lon1, lat2, lon2):
         n = max(a1.size, o1.size, a2.size, o2.size)
         if n <= 8 and min(a1.size, o1.size, a2.size, o2.size) in (1, n):
             b = np.broadcast(a1, o1, a2, o2)
-            out = np.array([_inverse_scalar_s12(w, x, y, z)
+            out = np.array([distance_scalar(w, x, y, z)
                             for w, x, y, z in b])
             return out.reshape(b.shape)
     return inverse(lat1, lon1, lat2, lon2)[0]

@@ -12,9 +12,9 @@ group inside ``df.groupBy("trace_id").applyInPandas``.
 Spark-first shape (the reference's own Spark recipe, wiki/Home.md:716-770,
 modernized): the road index is a broadcast variable, traces are the
 shuffle key, and all per-trace math is numpy over Arrow batches. Batch
-work that spans samples (radius search, emission) is vectorized over the
-whole trace at once; only the inherently sequential forward recursion
-iterates per time step.
+work that spans samples (radius search, Minset, emission) is vectorized
+over the whole trace at once; only the inherently sequential forward
+recursion and the carry-over it feeds iterate per time step.
 """
 
 from __future__ import annotations
@@ -386,48 +386,54 @@ def _round(f):
     return np.round(f / _PRECISION) * _PRECISION
 
 
-def minset(idx: RoadIndex, eidx: np.ndarray, frac: np.ndarray):
+def minset(idx: RoadIndex, eidx: np.ndarray, frac: np.ndarray, seg=None):
     """Remove semantically redundant candidates: drop fraction≈0 points
     reachable from an in-set candidate, and fraction≈1 points none of
-    whose successors are missing from the set."""
-    order = np.argsort(eidx)
-    eidx, frac = eidx[order], frac[order]
+    whose successors are missing from the set.
+
+    seg: optional per-candidate segment (sample) ids; candidates only
+    see successors within their own segment, so one call prunes a whole
+    trace's samples at once. Returns (eidx, frac) sorted by edge, or
+    with seg, (eidx, frac, seg) sorted by (segment, edge)."""
+    n_edges = len(idx.edge_id)
+    key = eidx if seg is None else seg * n_edges + eidx
+    order = np.argsort(key, kind="stable")
+    eidx, frac, key = eidx[order], frac[order], key[order]
+    if seg is not None:
+        seg = seg[order]
     n = len(eidx)
     rf = _round(frac)
-    if n == 0:
-        return eidx, frac
 
     # vectorized over all (candidate, successor) pairs at once: the
     # original per-candidate loop has no loop-carried dependency
     # (removal marks don't feed back into miss counting)
     starts = idx.succ_offsets[eidx]
-    ends = idx.succ_offsets[eidx + 1]
-    counts = ends - starts
+    counts = idx.succ_offsets[eidx + 1] - starts
     total = int(counts.sum())
+    removed = np.zeros(n, dtype=bool)
+    misses = np.zeros(n)
     if total:
-        # gather successors of every candidate: ranges [starts, ends)
+        # gather successors of every candidate: CSR ranges [start, end)
         src = np.repeat(np.arange(n), counts)
-        flat = np.concatenate([idx.successors[s:e]
-                               for s, e in zip(starts, ends)]) \
-            if n < 64 else idx.successors[
-                np.concatenate([np.arange(s, e) for s, e in zip(starts, ends)])]
-        pos = np.searchsorted(eidx, flat)
+        flat = idx.successors[np.arange(total) + np.repeat(
+            starts - np.cumsum(counts) + counts, counts)]
+        # search each successor among its own segment's candidates
+        q = flat if seg is None else seg[src] * n_edges + flat
+        pos = np.searchsorted(key, q)
         pos_c = np.minimum(pos, n - 1)
-        in_set = (pos < n) & (eidx[pos_c] == flat)
+        in_set = (pos < n) & (key[pos_c] == q)
         hit = pos_c[in_set]
         zero_hit = rf[hit] == 0.0
-        removed = np.zeros(n, dtype=bool)
         removed[hit[zero_hit]] = True
         misses = np.bincount(src, weights=~in_set, minlength=n)
         misses += np.bincount(src[in_set], weights=zero_hit, minlength=n)
-    else:
-        removed = np.zeros(n, dtype=bool)
-        misses = np.zeros(n)
 
     ones = (rf == 1.0) & ~removed & (misses == 0)
     removed |= ones
     keep = ~removed
-    return eidx[keep], frac[keep]
+    if seg is None:
+        return eidx[keep], frac[keep]
+    return eidx[keep], frac[keep], seg[keep]
 
 
 # ---------------------------------------------------------------------------
@@ -451,36 +457,46 @@ class _Cand:
         self.route_len = None
 
 
-def _candidates_for_trace(idx: RoadIndex, lats, lons, params: MatcherParams):
-    """Vectorized radius search + Minset + point geometry + emission
-    distance for every sample of a trace at once. Returns per-sample
-    tuples (eidx, frac, lat, lon, azi, dz) — ONE batched geodesic pass
-    for the whole trace instead of per-step little-array calls (the
-    per-call Vincenty overhead on 5-element arrays dominated the kernel
-    before this batching)."""
+def emission_prob(params: MatcherParams, dz, azi, cazi):
+    """Candidate emission (Matcher.java:185-238): the distance gaussian,
+    times the azimuth gaussian (floored at 1e-2) where the sample's
+    azimuth ``azi`` is not NaN. Elementwise, so any batch of candidates
+    gives the same value per candidate."""
+    sig2 = params.sigma ** 2
+    sqrt_2pi_sig2 = np.sqrt(2 * np.pi * sig2)
+    sigA2 = params.sigma_a ** 2
+    sqrt_2pi_sigA = np.sqrt(2 * np.pi * sigA2)
+    emission = 1 / sqrt_2pi_sig2 * np.exp(-dz * dz / (2 * sig2))
+    da = np.abs(azi - cazi)
+    da = np.minimum(da, 360.0 - da)
+    return np.where(np.isnan(azi), emission, emission * np.maximum(
+        1e-2, 1 / sqrt_2pi_sigA * np.exp(-da * da / (2 * sigA2))))
+
+
+def _candidates_for_trace(idx: RoadIndex, lats, lons, azis,
+                          params: MatcherParams):
+    """Vectorized radius search + Minset + point geometry + emission for
+    every sample of a trace at once. Returns per-sample tuples
+    (eidx, frac, lat, lon, azi, emission) — one segmented Minset and ONE
+    batched geodesic pass for the whole trace instead of per-step
+    little-array calls (per-call numpy overhead on 5-element arrays
+    dominated the kernel before this batching)."""
     pt, base, frac, _dist = idx.radius(lats, lons, params.max_radius)
     spt, seidx, sfrac, _src = idx.split(pt, base, frac)
-    kept = []
-    for i in range(len(lats)):
-        sel = spt == i
-        ei, fr = minset(idx, seidx[sel], sfrac[sel])
-        kept.append((ei, fr))
-    all_ei = np.concatenate([k[0] for k in kept]) if kept else np.zeros(0, np.int64)
-    all_fr = np.concatenate([k[1] for k in kept]) if kept else np.zeros(0)
-    if len(all_ei):
-        clat, clon, cazi = idx.edge_point(all_ei, all_fr)
-        counts = np.array([len(k[0]) for k in kept])
-        s_lat = np.repeat(lats, counts)
-        s_lon = np.repeat(lons, counts)
-        dz_all = geo.distance(s_lat, s_lon, clat, clon)
+    ei, fr, seg = minset(idx, seidx, sfrac, seg=spt)
+    counts = np.bincount(seg, minlength=len(lats))
+    if len(ei):
+        clat, clon, cazi = idx.edge_point(ei, fr)
+        dz = geo.distance(np.repeat(lats, counts), np.repeat(lons, counts),
+                          clat, clon)
+        em = emission_prob(params, dz, np.repeat(azis, counts), cazi)
     else:
-        clat = clon = cazi = dz_all = np.zeros(0)
+        clat = clon = cazi = em = np.zeros(0)
+    cols = (ei, fr, clat, clon, cazi, em)
     out = []
     pos = 0
-    for ei, fr in kept:
-        n = len(ei)
-        out.append((ei, fr, clat[pos:pos + n], clon[pos:pos + n],
-                    cazi[pos:pos + n], dz_all[pos:pos + n]))
+    for n in counts.tolist():
+        out.append(tuple(c[pos:pos + n] for c in cols))
         pos += n
     return out
 
@@ -506,10 +522,8 @@ def hmm_forward_arrays(filt_prev, seq_prev, trans, emission):
     seq_prev = np.asarray(seq_prev, dtype=np.float64)
     emission = np.asarray(emission, dtype=np.float64)
     P, C = len(filt_prev), len(emission)
-    filtprob = np.zeros(C)
-    seqprob = np.full(C, -np.inf)
-    pred = np.full(C, -1, dtype=np.int64)
-    keep = np.zeros(C, dtype=bool)
+    seeded = emission > 0
+    live = False
     if P and C:
         trans = np.asarray(trans, dtype=np.float64).reshape(P, C)
         ok = trans > 0
@@ -519,7 +533,7 @@ def hmm_forward_arrays(filt_prev, seq_prev, trans, emission):
         log_t = np.full((P, C), -np.inf)
         np.log10(trans, out=log_t, where=ok)
         log_e = np.full(C, -np.inf)
-        np.log10(emission, out=log_e, where=emission > 0)
+        np.log10(emission, out=log_e, where=seeded)
         seq_mat = seq_prev[:, None] + log_t + log_e[None, :]
         best = np.argmax(seq_mat, axis=0)
         keep = ok.any(axis=0) & (filt_col > 0)
@@ -531,9 +545,10 @@ def hmm_forward_arrays(filt_prev, seq_prev, trans, emission):
         # predecessor null — mirror that with pred = -1 so no bogus
         # routes[0][ci] gets attached downstream.
         pred = np.where(keep & np.isfinite(seqprob), best, -1)
-    normsum = filtprob[keep].sum()
-    if not keep.any() or P == 0 or normsum == 0.0:
-        keep = emission > 0
+        normsum = filtprob[keep].sum()
+        live = keep.any() and normsum != 0.0
+    if not live:
+        keep = seeded
         filtprob = np.where(keep, emission, 0.0)
         seqprob = np.full(C, -np.inf)
         np.log10(emission, out=seqprob, where=keep)
@@ -563,63 +578,47 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
 
     Returns the new candidate vector (possibly empty)."""
     if precomputed is None:
-        precomputed = _candidates_for_trace(idx, [lat], [lon], params)[0]
+        precomputed = _candidates_for_trace(idx, [lat], [lon], [azi],
+                                            params)[0]
     if route_cache is None:
         route_cache = {}
-    ei, fr, clat, clon, cazi, dz = precomputed
-    if not len(ei):
+    if not len(precomputed[0]):
         return []
-    ei = np.asarray(ei, dtype=np.int64)
-    fr = np.asarray(fr, dtype=np.float64).copy()
-    clat = np.asarray(clat, dtype=np.float64).copy()
-    clon = np.asarray(clon, dtype=np.float64).copy()
-    cazi = np.asarray(cazi, dtype=np.float64).copy()
-    dz = np.asarray(dz, dtype=np.float64).copy()
+    ei, fr, clat, clon, cazi = (c.tolist() for c in precomputed[:5])
+    emission = precomputed[5]
 
-    # predecessor position carry-over (Matcher.java:200-213), batched:
-    # one geodesic pass over all matching (predecessor, candidate) pairs.
-    # A carried candidate REUSES the predecessor's road point (the
-    # reference keeps the predecessor's RoadPoint object), so no
-    # edge_point recompute — only its emission distance changes.
+    # predecessor position carry-over (Matcher.java:200-213): a carried
+    # candidate REUSES the predecessor's road point (the reference keeps
+    # the predecessor's RoadPoint object), so no edge_point recompute —
+    # only its emission changes. The direction test runs first; the
+    # geodesic only for the hits that pass it.
     if prev_vector:
-        pos_of = {int(e): j for j, e in enumerate(ei)}
-        hits = [(p, pos_of[p.eidx]) for p in prev_vector if p.eidx in pos_of]
-        if hits:
-            js = np.array([j for _, j in hits], dtype=np.int64)
-            p_lat = np.array([p.lat for p, _ in hits])
-            p_lon = np.array([p.lon for p, _ in hits])
-            d = geo.distance(clat[js], clon[js], p_lat, p_lon)
-            pf = np.array([p.frac for p, _ in hits])
-            fwd = idx.edge_forward[[p.eidx for p, _ in hits]]
-            carry = (d < params.sigma) & np.where(fwd, fr[js] < pf, fr[js] > pf)
-            if carry.any():
-                cj = js[carry]
-                fr[cj] = pf[carry]
-                clat[cj], clon[cj] = p_lat[carry], p_lon[carry]
-                cazi[cj] = np.array([p.azi for p, _ in hits])[carry]
-                dz[cj] = geo.distance(np.full(len(cj), lat),
-                                      np.full(len(cj), lon),
-                                      clat[cj], clon[cj])
+        pos_of = {e: j for j, e in enumerate(ei)}
+        fwd = idx.edge_forward
+        carried = []
+        for p in prev_vector:
+            j = pos_of.get(p.eidx)
+            if j is None or not (fr[j] < p.frac if fwd[p.eidx]
+                                 else fr[j] > p.frac):
+                continue
+            if geo.distance_scalar(clat[j], clon[j], p.lat, p.lon) < params.sigma:
+                carried.append(j)
+                fr[j], clat[j], clon[j], cazi[j] = p.frac, p.lat, p.lon, p.azi
+        if carried:
+            dz = geo.distance(lat, lon, [clat[j] for j in carried],
+                              [clon[j] for j in carried])
+            emission = emission.copy()
+            emission[carried] = emission_prob(
+                params, dz, azi, np.array([cazi[j] for j in carried]))
 
-    sig2 = params.sigma ** 2
-    sqrt_2pi_sig2 = np.sqrt(2 * np.pi * sig2)
-    sigA2 = params.sigma_a ** 2
-    sqrt_2pi_sigA = np.sqrt(2 * np.pi * sigA2)
-    emission = 1 / sqrt_2pi_sig2 * np.exp(-dz * dz / (2 * sig2))
-    if not np.isnan(azi):
-        da = np.abs(azi - cazi)
-        da = np.minimum(da, 360.0 - da)
-        emission = emission * np.maximum(
-            1e-2, 1 / sqrt_2pi_sigA * np.exp(-da * da / (2 * sigA2)))
-
-    cands = [_Cand(ei[j], fr[j], clat[j], clon[j], cazi[j]) for j in range(len(ei))]
+    cands = [_Cand(*c) for c in zip(ei, fr, clat, clon, cazi)]
 
     # ------ transitions + forward step (Filter.execute) ------
     # with no predecessors trans is (0, C), and hmm_forward_arrays seeds
     # the vector from emissions (the initial step)
     trans = np.zeros((len(prev_vector), len(cands)))
     routes: list[list] = [[None] * len(cands) for _ in prev_vector]
-    rlens = np.zeros((len(prev_vector), len(cands)))
+    rlens: list[list] = [[0.0] * len(cands) for _ in prev_vector]
     if prev_vector:
         dt_ms = int(t_ms - prev_time)
         bound = max(1000.0, min(params.max_distance, (dt_ms // 1000) * 100.0))
@@ -684,16 +683,17 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
     seq_prev = np.array([p.seqprob for p in prev_vector])
     filtprob, seqprob, pred, keep = hmm_forward_arrays(
         filt_prev, seq_prev, trans, emission)
+    filtprob, seqprob, pred = filtprob.tolist(), seqprob.tolist(), pred.tolist()
     result: list[_Cand] = []
-    for ci in np.flatnonzero(keep):
+    for ci in np.flatnonzero(keep).tolist():
         c = cands[ci]
-        c.filtprob = float(filtprob[ci])
-        c.seqprob = float(seqprob[ci])
-        if pred[ci] >= 0:   # seeded candidates keep pred/route None
-            best = int(pred[ci])
+        c.filtprob = filtprob[ci]
+        c.seqprob = seqprob[ci]
+        best = pred[ci]
+        if best >= 0:   # seeded candidates keep pred/route None
             c.pred = prev_vector[best]
             c.route = routes[best][ci]
-            c.route_len = float(rlens[best, ci])
+            c.route_len = rlens[best][ci]
         result.append(c)
 
     # KState.update: break candidates chain to previous estimate
@@ -791,7 +791,7 @@ def match_trace(idx: RoadIndex, trace_id, sample_ids, times_ms, lats, lons,
     k_ids, k_t = sample_ids[kept], times_ms[kept]
     k_lat, k_lon, k_azi = lats[kept], lons[kept], azimuths[kept]
 
-    cand_sets = _candidates_for_trace(idx, k_lat, k_lon, params)
+    cand_sets = _candidates_for_trace(idx, k_lat, k_lon, k_azi, params)
     if route_cache is None:
         route_cache = {}
 

@@ -194,6 +194,27 @@ def test_intersect_geodesics_vectorized_matches_scalar():
         assert abs(float(slon) - vlon[i]) < 1e-9
 
 
+def test_distance_scalar_agrees_with_vector_nearby():
+    """The scalar and vectorized Vincenty paths are not bit-identical
+    (libm vs SIMD rounding, per-pair vs batch-wide convergence), but on
+    the short pairs map matching measures they agree to 1e-7 relative,
+    and the tiny-batch `distance` path is the scalar one."""
+    rng = np.random.default_rng(11)
+    n = 5000
+    lat1 = rng.uniform(-70, 70, n)
+    lon1 = rng.uniform(-180, 180, n)
+    lat2, lon2, _ = geo.direct(lat1, lon1, rng.uniform(0, 360, n),
+                               rng.uniform(1.0, 200.0, n))
+    vec = geo.inverse(lat1, lon1, lat2, lon2)[0]
+    sca = np.array([geo.distance_scalar(*p) for p in
+                    zip(lat1.tolist(), lon1.tolist(), lat2.tolist(), lon2.tolist())])
+    assert np.all(np.abs(sca - vec) <= 1e-7 * vec)
+    for i in range(0, n, 500):
+        got = geo.distance(lat1[i:i + 3], lon1[i:i + 3], lat2[i:i + 3], lon2[i:i + 3])
+        assert got.tolist() == sca[i:i + 3].tolist()
+    assert geo.distance_scalar(48.0, 11.0, 48.0, 11.0) == 0.0
+
+
 def test_road_invert_reference_wkts():
     """RoadTest.testInvert (roadmap/RoadTest.java:32-91) verbatim: WKB
     linestring reversal preserves every coordinate in reversed order for

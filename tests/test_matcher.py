@@ -460,6 +460,39 @@ def test_minset_reference_goldens():
     assert run(m2, [(0, 1), (1, 0), (2, 0), (3, 1), (6, 0), (8, 0)]) == {0, 3}
 
 
+def test_minset_segmented_equals_per_sample():
+    """One segmented minset call over a whole trace's split hits returns,
+    per sample, exactly what a per-sample minset call returns — with a
+    sample that has no hits and a segment whose candidates are all
+    removed (every edge of the strongly connected grid at fraction 1:
+    no candidate misses a successor)."""
+    from barefoot_spark import roads as R
+    from barefoot_spark.index import RoadIndex
+    from barefoot_spark.sources import samples as SS
+
+    g = RoadIndex(R.grid_pdf(8, seed=3), res=15)
+    tr = SS.synth_traces(g, n_traces=4, samples_per_trace=30, seed=9)
+    n_edges = len(g.edge_id)
+    for _, t in tr.groupby("trace_id"):
+        lats = np.append(t["lat"].to_numpy(), 60.0)     # far off: no hits
+        lons = np.append(t["lon"].to_numpy(), 30.0)
+        pt, base, frac, _ = g.radius(lats, lons, 120.0)
+        spt, seidx, sfrac, _ = g.split(pt, base, frac)
+        full = len(lats)
+        spt = np.concatenate([spt, np.full(n_edges, full)])
+        seidx = np.concatenate([seidx, np.arange(n_edges)])
+        sfrac = np.concatenate([sfrac, np.ones(n_edges)])
+        ei, fr, seg = M.minset(g, seidx, sfrac, seg=spt)
+        assert np.all(np.diff(seg) >= 0)
+        assert not np.any(seg == full - 1) and not np.any(seg == full)
+        for i in range(full + 1):
+            want_e, want_f = M.minset(g, seidx[spt == i], sfrac[spt == i])
+            assert ei[seg == i].tolist() == want_e.tolist()
+            assert fr[seg == i].tolist() == want_f.tolist()
+        assert len(M.minset(g, seidx[spt == full], sfrac[spt == full])[0]) == 0
+        assert 0 < len(ei) < len(seidx) - n_edges
+
+
 def test_route_cache_equivalence_random():
     """route_ssmt_cached must return byte-identical paths to route_ssmt
     for many queries sharing one tree cache — random sources, fractions,

@@ -3,10 +3,12 @@ strongest cross-check (tracker/TrackerServerTest.java:156-166): feeding
 samples one at a time through the online matcher yields exactly the
 offline mmatch sequence (same edges, fractions to 1e-10)."""
 
+import math
+
 import numpy as np
 import pytest
 
-from barefoot_spark import roads
+from barefoot_spark import geo, roads
 from barefoot_spark.index import RoadIndex
 from barefoot_spark.operators import match as M
 from barefoot_spark.sources import samples as SS
@@ -65,6 +67,73 @@ def test_online_equals_offline_thinned(grid_idx):
         samples = list(zip(g["time"], g["lat"], g["lon"], g["azimuth"]))
         assert 0 < len(offline_rows(grid_idx, samples, params)) < len(samples)
         check_equality(grid_idx, samples, params)
+
+
+def _stop_trace(grid_idx):
+    """A synthetic trace with ~30% NaN azimuths and a 10-sample stop
+    (jittered repeats of one position, which force chained carries)."""
+    pdf = SS.synth_traces(grid_idx, n_traces=1, samples_per_trace=40, seed=21)
+    rng = np.random.default_rng(4)
+    lat, lon, azi = (pdf[c].to_numpy().copy() for c in ("lat", "lon", "azimuth"))
+    azi[rng.random(len(azi)) < 0.3] = np.nan
+    lat[15:25] = lat[15] + rng.normal(0, 1e-5, 10)
+    lon[15:25] = lon[15] + rng.normal(0, 1e-5, 10)
+    return list(zip(pdf["time"].tolist(), lat.tolist(), lon.tolist(),
+                    azi.tolist()))
+
+
+def test_carry_over_and_emission_on_stop(grid_idx, monkeypatch):
+    """Matcher.java:200-238 on a stop: online equals offline, every
+    carried candidate keeps its predecessor's fraction and position, and
+    its emission is the gaussian recomputed from that position (azimuth
+    factor only where the sample has an azimuth)."""
+    samples = _stop_trace(grid_idx)
+    params = M.MatcherParams()
+    check_equality(grid_idx, samples, params)
+
+    emissions = []
+    hmm = M.hmm_forward_arrays
+
+    def spy(filt_prev, seq_prev, trans, emission):
+        emissions.append(np.array(emission))
+        return hmm(filt_prev, seq_prev, trans, emission)
+
+    monkeypatch.setattr(M, "hmm_forward_arrays", spy)
+    t, lat, lon, azi = (np.array(c) for c in zip(*samples))
+    pre = M._candidates_for_trace(grid_idx, lat, lon, azi, params)
+    sig2, sa2 = params.sigma ** 2, params.sigma_a ** 2
+    prev, prev_t, cache, was_carried = [], None, {}, set()
+    carried = chained = nan_azi = 0
+    for k in range(len(samples)):
+        vec = M.forward_step(grid_idx, params, prev, prev_t, int(t[k]),
+                             float(lat[k]), float(lon[k]), float(azi[k]),
+                             precomputed=pre[k], route_cache=cache)
+        if not vec:
+            continue
+        ei, fr = pre[k][0].tolist(), pre[k][1].tolist()
+        by_edge = {p.eidx: p for p in prev}
+        now_carried = set()
+        for c in vec:
+            j = ei.index(c.eidx)
+            if c.frac == fr[j]:
+                continue
+            p = by_edge[c.eidx]
+            assert (c.frac, c.lat, c.lon, c.azi) == (p.frac, p.lat, p.lon, p.azi)
+            d = geo.distance_scalar(float(lat[k]), float(lon[k]), c.lat, c.lon)
+            want = math.exp(-d * d / (2 * sig2)) / math.sqrt(2 * math.pi * sig2)
+            if math.isnan(azi[k]):
+                nan_azi += 1
+            else:
+                da = abs(azi[k] - c.azi)
+                da = min(da, 360.0 - da)
+                want *= max(1e-2, math.exp(-da * da / (2 * sa2))
+                            / math.sqrt(2 * math.pi * sa2))
+            assert emissions[-1][j] == pytest.approx(want, rel=1e-12)
+            carried += 1
+            chained += p.eidx in was_carried
+            now_carried.add(c.eidx)
+        prev, prev_t, was_carried = vec, int(t[k]), now_carried
+    assert carried >= 5 and chained >= 2 and 0 < nan_azi < carried
 
 
 def test_out_of_order_rejected(idx):

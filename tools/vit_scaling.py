@@ -50,14 +50,19 @@ def launch(cpus: int) -> dict:
                            f"{p.returncode}:\n{p.stderr}")
     res = json.loads(out[-1])
     new = set(glob.glob(os.path.join(LOGDIR, "*"))) - before
-    res.update(parse_eventlog(new.pop()))
+    res.update(parse_eventlog(new.pop(), res["nparts"]))
     return res
 
 
-def parse_eventlog(path: str) -> dict:
-    """Largest python-stage (64 tasks) wall + summed task core-seconds,
-    taken from the LAST such stage (the warm best-of rep)."""
-    f = glob.glob(os.path.join(path, "events*"))[0]
+def parse_eventlog(path: str, nparts: int) -> dict:
+    """Wall + summed task core-seconds of the fastest (warm) match stage:
+    a stage of ``nparts`` tasks (the worker's partition count) whose
+    summed run time marks it as the kernel. Expects the rolling,
+    zstd-compressed log directory that _vit_worker.py configures."""
+    logs = glob.glob(os.path.join(path, "events*"))
+    if not logs:
+        raise RuntimeError(f"no rolling event log file (events*) in {path}")
+    f = logs[0]
     raw = subprocess.run(["zstd", "-dc", f], capture_output=True).stdout
     per_stage: dict[int, list] = {}
     walls: dict[int, float] = {}
@@ -72,13 +77,17 @@ def parse_eventlog(path: str) -> dict:
                 m.get("Executor Run Time", 0))
         elif e.get("Event") == "SparkListenerStageCompleted":
             si = e["Stage Info"]
-            if si["Number of Tasks"] == 64 and "Completion Time" in si:
+            if si["Number of Tasks"] == nparts and "Completion Time" in si:
                 walls[si["Stage ID"]] = \
                     si["Completion Time"] - si["Submission Time"]
-    # kernel stages are the 64-task stages whose run_sum dwarfs the
+    # kernel stages are the nparts-task stages whose run_sum dwarfs the
     # cache/count stages; take the fastest (warm) one
     cand = [(walls[s], sum(per_stage[s])) for s in walls
             if sum(per_stage.get(s, [0])) > 30_000]
+    if not cand:
+        raise RuntimeError(
+            f"no {nparts}-task stage with over 30 s of summed task time in "
+            f"{f}; {nparts}-task stages seen: {sorted(walls)}")
     wall_ms, run_ms = min(cand)
     return {"stage_wall_s": round(wall_ms / 1e3, 3),
             "work_core_s": round(run_ms / 1e3, 1)}
